@@ -22,15 +22,33 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     PipelineQueries.q30_annotations(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    RelationalQueries.all ++ RelationalQueries2.all ++ PipelineQueries.all ++
-      DedupQueries.all ++ SimilarityQueries.all ++ TextQueries.all ++
-      StreamQueries.all ++ MiscQueries.all ++ TrainingQueries.all ++
-      RelationalQueries3.all ++ TimeSeriesQueries.all
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = disjointUnion("query", Seq(
+    RelationalQueries.all, RelationalQueries2.all, PipelineQueries.all,
+    DedupQueries.all, SimilarityQueries.all, TextQueries.all,
+    StreamQueries.all, MiscQueries.all, TrainingQueries.all,
+    RelationalQueries3.all, TimeSeriesQueries.all))
 
-  def oracleSql: Map[String, String] =
-    RelationalQueries.oracle ++ RelationalQueries2.oracle ++ PipelineQueries.oracle ++
-      DedupQueries.oracle ++ SimilarityQueries.oracle ++ TextQueries.oracle ++
-      StreamQueries.oracle ++ MiscQueries.oracle ++ TrainingQueries.oracle ++
-      RelationalQueries3.oracle ++ TimeSeriesQueries.oracle
+  lazy val oracleSql: Map[String, String] = {
+    val oracles = disjointUnion("oracle", Seq(
+      RelationalQueries.oracle, RelationalQueries2.oracle, PipelineQueries.oracle,
+      DedupQueries.oracle, SimilarityQueries.oracle, TextQueries.oracle,
+      StreamQueries.oracle, MiscQueries.oracle, TrainingQueries.oracle,
+      RelationalQueries3.oracle, TimeSeriesQueries.oracle))
+    requireQueries(oracles.keySet, queries.keySet)
+    oracles
+  }
+
+  /** The union of per-module maps, failing on a name that two modules
+    * declare: `++` would let the later entry silently shadow the earlier.
+    */
+  private[graft] def disjointUnion[V](kind: String, parts: Seq[Map[String, V]]): Map[String, V] = {
+    val dup = parts.flatMap(_.keys).groupBy(identity).collect { case (k, ks) if ks.size > 1 => k }
+    require(dup.isEmpty, s"duplicate $kind name(s): ${dup.toSeq.sorted.mkString(", ")}")
+    parts.reduce(_ ++ _)
+  }
+
+  private[graft] def requireQueries(oracles: Set[String], queries: Set[String]): Unit = {
+    val orphans = oracles -- queries
+    require(orphans.isEmpty, s"oracle entries without a query: ${orphans.toSeq.sorted.mkString(", ")}")
+  }
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -269,7 +269,15 @@ object Sinks {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     healCrashedSwap(fs, p)
-    if (fs.exists(p)) Some(spark.read.parquet(path)) else None
+    if (!fs.exists(p)) None
+    else
+      try Some(spark.read.parquet(path))
+      catch {
+        // a path without data files (a partitioned write of no rows leaves
+        // only _SUCCESS) holds no rows
+        case e: org.apache.spark.sql.AnalysisException
+            if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
+      }
   }
 
   /** Replace `path` with `merged` via a rename-aside swap: the source of a
@@ -329,45 +337,82 @@ object Sinks {
     fs.delete(old, true)
   }
 
-  /** K5/K6 — upsert keyed by `keyCol`: read-merge-overwrite. New rows win
-    * over existing rows with the same key (the reference's Painless
-    * script-update semantics, `ingester/annotations_indexer.py:148-200`).
-    * Idempotent under re-runs of the same batch: merging twice converges.
+  /** K5/K6 — upsert keyed by `keyCol`. New rows win over existing rows with
+    * the same key (the reference's Painless script-update semantics,
+    * `ingester/annotations_indexer.py:148-200`). Keys match NULL-SAFE
+    * (`<=>`): a plain equi-join never matches null keys, so a replayed
+    * batch carrying a null-key row would re-append it on every replay. Under
+    * `<=>` all null-key rows form one logical key, and a batch containing
+    * any null-key row replaces the store's null-key rows wholesale.
     *
-    * At scale this is the `foreachBatch` MERGE pattern; on a plain-parquet
-    * sink the merge rewrites the table once per batch, so batch sizing (B1
-    * segments) bounds the rewrite cost.
+    * The batch is evaluated exactly once: it is written to a hidden staging
+    * sibling (`.name__batch`, dot-prefixed like `__tmp`/`__old`), and every
+    * later step reads the staged files. A side-effecting batch (an HTTP
+    * tagger) is therefore never called twice, and the keys that decide what
+    * is replaced are the keys of the rows that get written. Then:
+    *  - an absent store becomes the batch ([[replaceWith]]);
+    *  - an empty batch changes nothing;
+    *  - APPEND, when the batch schema equals the store's and no staged key
+    *    is already in the store (a null-safe semi-join that reads only the
+    *    store's key column): the staged part files are renamed into the
+    *    store. The batch is written once and the existing files are not
+    *    touched, so a segment costs O(segment), not O(store);
+    *  - MERGE, otherwise: the store minus the staged keys, plus the staged
+    *    rows, replaces the store through [[replaceWith]].
+    *
+    * Crash and replay. A crash while staging leaves the store untouched;
+    * the next call overwrites the staged copy. A crash between the append's
+    * renames leaves part of the batch in the store (a reader during the
+    * renames can see that part too); a replay of the same batch finds those
+    * keys, takes the merge path and converges. A crash inside the merge is
+    * [[replaceWith]]'s case. Merging twice converges, so the upsert stays
+    * idempotent under re-runs, the property the streaming exactly-once
+    * argument rests on.
+    *
+    * Each append adds up to one file per batch partition. [[compact]]
+    * bounds the file count.
     */
   def upsert(spark: SparkSession, batch: DataFrame, path: String, keyCol: String): Unit =
-    upsert(spark, batch, path, keyCol, readExisting(spark, path))
-
-  /** [[upsert]] with the existing sink passed in by a caller that already
-    * holds a handle (the streaming admission flows compare a batch against
-    * the store and then update it). This saves the extra path-existence
-    * probe and parquet-footer open — NOT the merge's data scan: `existing`
-    * is lazy, so the merge write still reads the store once (callers that
-    * want a single physical read must snapshot the handle themselves and
-    * pay the materialization). `existing` must be the CURRENT contents of
-    * `path` (or None when absent); the single-writer assumption makes that
-    * safe to guarantee.
-    */
-  def upsert(spark: SparkSession, batch: DataFrame, path: String, keyCol: String,
-             existing: Option[DataFrame]): Unit = {
-    val merged = existing match {
+    readExisting(spark, path) match {
+      case None => replaceWith(spark, batch, path)
       case Some(old) =>
-        // NULL-SAFE key match (<=>): a plain equi-anti-join never matches
-        // null keys, so a replayed batch carrying a null-key row would
-        // re-append it every replay — one duplicate per crash, breaking
-        // the idempotence contract the streaming exactly-once argument
-        // rests on. Under <=> all null-key rows form one logical key:
-        // a batch containing any null-key row replaces the store's
-        // null-key rows wholesale, and merging twice converges.
-        val keys = batch.select(col(keyCol).as("__upsert_k")).distinct()
-        old.join(keys, col(keyCol) <=> col("__upsert_k"), "left_anti")
-          .unionByName(batch)
-      case None => batch
+        val dst = new Path(path)
+        val staging = new Path(dst.getParent, "." + dst.getName + "__batch")
+        batch.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+        val conf = spark.sparkContext.hadoopConfiguration
+        val fs = dst.getFileSystem(conf)
+        // the row counts come from the parquet footers, without a Spark job;
+        // a writer task with no rows still leaves an empty file
+        val parts = fs.listStatus(staging).filter(st =>
+          st.isFile && st.getPath.getName.endsWith(".parquet") && parquetRows(conf, st) > 0)
+        if (parts.nonEmpty) {
+          // read with the batch's schema: no schema-inference job, and the
+          // reader makes it nullable like the store's inferred schema
+          val staged = spark.read.schema(batch.schema).parquet(staging.toString)
+          val keys = staged.select(col(keyCol).as("__upsert_k"))
+          val append = staged.schema == old.schema &&
+            !old.select(col(keyCol)).join(keys, col(keyCol) <=> col("__upsert_k"), "left_semi")
+              // one job, and each store partition stops at its first hit
+              .mapPartitions(it => Iterator(it.hasNext))(Encoders.scalaBoolean)
+              .collect().contains(true)
+          if (append) parts.foreach { st =>
+            val to = new Path(dst, st.getPath.getName)
+            if (!fs.rename(st.getPath, to))
+              throw new java.io.IOException(s"failed to append ${st.getPath} as $to")
+          }
+          else replaceWith(spark,
+            old.join(keys.distinct(), col(keyCol) <=> col("__upsert_k"), "left_anti")
+              .unionByName(staged),
+            path)
+        }
+        fs.delete(staging, true)
     }
-    replaceWith(spark, merged, path)
+
+  private def parquetRows(conf: org.apache.hadoop.conf.Configuration,
+                          st: org.apache.hadoop.fs.FileStatus): Long = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+    try reader.getRecordCount finally reader.close()
   }
 
   /** Small-file compaction for a parquet sink: rewrite `path` into
@@ -482,9 +527,10 @@ object Sinks {
 
   // ---------------------------------------------------------------------
   // Append-only batch-partitioned store (the streaming-admission state
-  // backend). The upsert store above is read-merge-REWRITE per batch —
-  // O(store) writes per micro-batch, the measured cost drift as history
-  // grows. Admission state is append-only by construction (admission
+  // backend). The upsert store above appends a key-disjoint batch but
+  // rewrites the store, O(store) writes, for every batch that replaces a
+  // key — a replayed micro-batch among them. Admission state is
+  // append-only by construction (admission
   // decisions are final), so the scale-correct layout is one partition
   // directory per micro-batch (`batch=<id>/`), written with Overwrite:
   //   - appending a batch writes O(batch) bytes, never O(store);

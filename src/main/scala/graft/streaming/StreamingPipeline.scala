@@ -59,9 +59,10 @@ object StreamingPipeline {
       keys: Seq[String]): DataFrame =
     stream.join(broadcast(dim), keys, "left")
 
-  /** K5 upsert sink for a stream: foreachBatch read-merge-overwrite keyed by
-    * the composite annotation key. Exactly-once under retries: the merge is
-    * idempotent (same keys → same survivors), so a replayed batch converges.
+  /** K5 upsert sink for a stream: a foreachBatch [[Sinks.upsert]] keyed by
+    * the composite annotation key, which appends a batch of new keys and
+    * merges one that replaces keys. Exactly-once under retries: a replayed
+    * batch finds its own keys, takes the merge, and converges.
     */
   def startUpsertSink(
       annotated: DataFrame,

@@ -124,6 +124,19 @@ class QueriesSpec extends SparkSuite {
     assert(missing.isEmpty, s"oracle entries without queries: $missing")
   }
 
+  test("the inventory refuses a name two modules declare and an oracle without a query") {
+    val dup = intercept[IllegalArgumentException] {
+      SparkEntry.disjointUnion("query", Seq(Map("q1" -> 1, "q2" -> 2), Map("q3" -> 3, "q2" -> 4)))
+    }
+    assert(dup.getMessage.contains("duplicate query name(s): q2"), dup.getMessage)
+    assert(SparkEntry.disjointUnion("query", Seq(Map("q1" -> 1), Map("q2" -> 2))) ==
+      Map("q1" -> 1, "q2" -> 2))
+    val orphan = intercept[IllegalArgumentException] {
+      SparkEntry.requireQueries(Set("q1", "q9"), Set("q1", "q2"))
+    }
+    assert(orphan.getMessage.contains("oracle entries without a query: q9"), orphan.getMessage)
+  }
+
   test("no query's FINAL output schema contains DecimalType (r14 gate-hash class)") {
     // Round-14 adjudication: across two driver rounds, the only two
     // hash-fails (q192, q230) were exactly the only two queries whose

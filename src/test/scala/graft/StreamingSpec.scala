@@ -171,16 +171,103 @@ class StreamingSpec extends SparkSuite {
       .map(r => (r.getString(0), r.getString(1))).toMap
     assert(got == Map("k1" -> "v1", "k2" -> "v2b", "k3" -> "v3"),
       s"prior store must be recovered from the aside copy, got $got")
-    // (b) backstop: a caller that BYPASSES readExisting (stale existing
-    // handle) must be refused rather than allowed to destroy the aside copy
+    // (b) backstop: a swap that BYPASSES readExisting must be refused
+    // rather than allowed to destroy the aside copy
     assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
       new org.apache.hadoop.fs.Path(base, ".sink__old")), "re-simulate crash")
     val ex = intercept[java.io.IOException] {
-      Sinks.upsert(spark, b2, dir, "key", existing = None)
+      Sinks.replaceWith(spark, b2, dir)
     }
     assert(ex.getMessage.contains("crashed swap"), ex.getMessage)
     assert(fs.exists(new org.apache.hadoop.fs.Path(base, ".sink__old")),
       "the refusal must leave the only copy intact")
+  }
+
+  private def fsOf(dir: String) = new org.apache.hadoop.fs.Path(dir)
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The store's data files: name → bytes. */
+  private def storeFiles(dir: String): Map[String, Seq[Byte]] =
+    new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+      .map(f => f.getName -> Files.readAllBytes(f.toPath).toSeq).toMap
+
+  private def kv(dir: String): Map[Option[String], String] =
+    spark.read.parquet(dir).as[(Option[String], String)].collect().toMap
+
+  test("upsert appends a key-disjoint batch: old files byte-identical, batch files added") {
+    val base = Files.createTempDirectory("append").toString
+    val dir = base + "/sink"
+    Sinks.upsert(spark, Seq(("k1", "v1"), ("k2", "v2")).toDF("key", "val"), dir, "key")
+    val before = storeFiles(dir)
+    Sinks.upsert(spark, Seq(("k3", "v3"), ("k4", "v4")).toDF("key", "val"), dir, "key")
+    val after = storeFiles(dir)
+    assert(before.forall { case (n, b) => after.get(n).contains(b) },
+      "an append must leave every existing file byte-identical")
+    assert(after.size > before.size, "the batch must land as new files")
+    assert(kv(dir) == Map(Some("k1") -> "v1", Some("k2") -> "v2",
+      Some("k3") -> "v3", Some("k4") -> "v4"))
+    assert(!fsOf(dir).exists(new org.apache.hadoop.fs.Path(base, ".sink__batch")),
+      "the staging copy must be removed")
+  }
+
+  test("upsert merges when a key collides, a null key included: the store is rewritten") {
+    val dir = Files.createTempDirectory("merge").toString + "/sink"
+    Sinks.upsert(spark,
+      Seq((Option("k1"), "v1"), (Option.empty[String], "n1")).toDF("key", "val"), dir, "key")
+    val v0 = storeFiles(dir).keySet
+    Sinks.upsert(spark, Seq((Option("k1"), "v1b")).toDF("key", "val"), dir, "key")
+    val v1 = storeFiles(dir).keySet
+    assert((v0 & v1).isEmpty, "a colliding key must take the merge path")
+    assert(kv(dir) == Map(Some("k1") -> "v1b", None -> "n1"))
+    // a null key collides with the store's null key under <=>: the merge
+    // replaces the store's null-key rows wholesale
+    Sinks.upsert(spark,
+      Seq((Option.empty[String], "n2"), (Option("k9"), "v9")).toDF("key", "val"), dir, "key")
+    assert((v1 & storeFiles(dir).keySet).isEmpty, "a null key must take the merge path")
+    assert(kv(dir) == Map(Some("k1") -> "v1b", None -> "n2", Some("k9") -> "v9"))
+  }
+
+  test("upsert never appends a batch whose schema differs from the store's") {
+    val dir = Files.createTempDirectory("schema").toString + "/sink"
+    Sinks.upsert(spark, Seq(("k1", "v1")).toDF("key", "val"), dir, "key")
+    val v0 = storeFiles(dir).keySet
+    // new keys only, but the columns come in another order
+    Sinks.upsert(spark, Seq(("v2", "k2")).toDF("val", "key"), dir, "key")
+    assert((v0 & storeFiles(dir).keySet).isEmpty, "a differing schema must take the merge path")
+    assert(spark.read.parquet(dir).columns.toSeq == Seq("key", "val"))
+    assert(kv(dir) == Map(Some("k1") -> "v1", Some("k2") -> "v2"))
+  }
+
+  test("upsert of an empty batch adds no file") {
+    val dir = Files.createTempDirectory("empty").toString + "/sink"
+    Sinks.upsert(spark, Seq(("k1", "v1")).toDF("key", "val"), dir, "key")
+    val before = storeFiles(dir)
+    Sinks.upsert(spark, Seq.empty[(String, String)].toDF("key", "val"), dir, "key")
+    assert(storeFiles(dir) == before)
+    assert(kv(dir) == Map(Some("k1") -> "v1"))
+  }
+
+  test("a crash halfway through an append's renames converges on replay") {
+    val base = Files.createTempDirectory("halfappend").toString
+    val dir = base + "/sink"
+    Sinks.upsert(spark, Seq(("k1", "v1"), ("k2", "v2")).toDF("key", "val"), dir, "key")
+    val batch = (3 to 10).map(i => (s"k$i", s"v$i")).toDF("key", "val").repartition(4)
+    // the crashed call: the batch staged, two of its four files moved
+    val staging = base + "/.sink__batch"
+    batch.write.parquet(staging)
+    val fs = fsOf(dir)
+    val staged = fs.listStatus(new org.apache.hadoop.fs.Path(staging))
+      .filter(_.getPath.getName.endsWith(".parquet"))
+    assert(staged.length == 4)
+    staged.take(2).foreach(st =>
+      assert(fs.rename(st.getPath, new org.apache.hadoop.fs.Path(dir, st.getPath.getName))))
+    val want = ((1 to 10).map(i => Some(s"k$i") -> s"v$i")).toMap
+    Sinks.upsert(spark, batch, dir, "key") // replay
+    assert(spark.read.parquet(dir).count() == 10, "the replay must not duplicate moved rows")
+    assert(kv(dir) == want)
+    Sinks.upsert(spark, batch, dir, "key") // and again
+    assert(spark.read.parquet(dir).count() == 10)
+    assert(kv(dir) == want)
   }
 
   test("AvailableNow resumes from checkpoint: only NEW files processed on restart (B1)") {
